@@ -324,7 +324,8 @@ object Bench {
         .select(col("vec_id").cast("long").as("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("embedding"))
         .limit(n).as[BenchEmb].collect().toSeq
-      val sink = new graft.streaming.Int8IndexSink(spark, tmp("bench-sq8"))
+      val sink = new graft.streaming.VectorIndexSink(spark, tmp("bench-sq8"),
+        graft.streaming.VectorCodec.Sq8)
       val mem = MemoryStream[BenchEmb](spark)
       val q = sink.attach(mem.toDS(), "vec_id", "embedding")
         .outputMode("append")
@@ -350,10 +351,11 @@ object Bench {
       val imgs = graft.ops.Multimodal.syntheticImages(
           spark.range(n).toDF("doc_id"), "doc_id")
         .as[BenchImg].collect().toSeq
-      val sink = new graft.streaming.ImageNearDupSink(spark, tmp("bench-imgdup"))
+      val sink = new graft.streaming.BandedIndexSink(spark, tmp("bench-imgdup"),
+        graft.streaming.BandingScheme.image())
       val kept = new java.util.concurrent.atomic.AtomicLong()
       val mem = MemoryStream[BenchImg](spark)
-      val q = sink.attach(mem.toDS()) { (k, _) => kept.addAndGet(k.count()); () }
+      val q = sink.attach(mem.toDS(), "doc_id", "media") { (k, _) => kept.addAndGet(k.count()); () }
         .outputMode("append")
         .option("checkpointLocation", tmp("bench-imgdup-ckpt"))
         .start()
@@ -382,10 +384,11 @@ object Bench {
       val clips = graft.ops.Multimodal.syntheticAudio(
           spark.range(n).toDF("doc_id"), "doc_id")
         .as[BenchImg].collect().toSeq
-      val sink = new graft.streaming.AudioNearDupSink(spark, tmp("bench-auddup"))
+      val sink = new graft.streaming.BandedIndexSink(spark, tmp("bench-auddup"),
+        graft.streaming.BandingScheme.audio())
       val kept = new java.util.concurrent.atomic.AtomicLong()
       val mem = MemoryStream[BenchImg](spark)
-      val q = sink.attach(mem.toDS()) { (k, _) => kept.addAndGet(k.count()); () }
+      val q = sink.attach(mem.toDS(), "doc_id", "media") { (k, _) => kept.addAndGet(k.count()); () }
         .outputMode("append")
         .option("checkpointLocation", tmp("bench-auddup-ckpt"))
         .start()

@@ -158,8 +158,8 @@ object Dedup {
 
   /** (id, band, band_hash) rows — one per signature band. Only 3 longs per
     * (doc, band) row ever ride the candidate-join shuffles; signature arrays
-    * stay behind. Shared with the streaming NearDupSink so batch and stream
-    * band identically. */
+    * stay behind. Shared with the streaming MinHash banding scheme so batch
+    * and stream band identically. */
   private[graft] def bandHashes(sigs: DataFrame, numBands: Int): DataFrame =
     sigs.select(col("id"), col("sig"),
         explode(sequence(lit(0), lit(numBands - 1))).as("band"))
@@ -193,26 +193,20 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / size(a)
 
-  def minhashCandidatePairs(sigs: DataFrame, numBands: Int): DataFrame =
+  def minhashCandidatePairs(sigs: DataFrame, numBands: Int): DataFrame = {
     // The signature frame is materialized once (eager, lineage-truncated):
     // it feeds BOTH sides of the self-join plus two re-attach joins, and
     // without the checkpoint Spark re-derives the full signature pipeline
     // (scan + explode + aggregate) for each of the four uses — at corpus
     // scale that is four scans of the raw text instead of one pass over a
     // 32-longs-per-doc index.
-    minhashCandidatePairsOn(sigs.localCheckpoint(true), numBands)
-
-  /** [[minhashCandidatePairs]] over an ALREADY-materialized signature frame
-    * (persisted or checkpointed by the caller) — the streaming sink persists
-    * its per-batch signatures anyway, and the public entry's unconditional
-    * localCheckpoint was a redundant second materialization per micro-batch.
-    */
-  private[graft] def minhashCandidatePairsOn(s: DataFrame, numBands: Int): DataFrame =
+    val s = sigs.localCheckpoint(true)
     bandedCandidates(s, numBands)
       .join(s.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(s.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b")))
       .select("id_a", "id_b", "est_jaccard")
+  }
 
   /** End-to-end MinHash-LSH near-dup detection, candidates-then-verify: banded
     * LSH proposes, exact Jaccard (full token sets) disposes. Output equals the
@@ -321,8 +315,8 @@ object Dedup {
         b * (size(col("sig")) / numBands).cast("int") + 1,
         (size(col("sig")) / numBands).cast("int"))))
 
-  /** Total reference TOKEN-HASH count at or below which the broadcast-probe
-    * route also broadcasts the reference's sorted token-hash arrays and
+  /** Total reference TOKEN-HASH count at or below which the broadcast route
+    * runs: it also broadcasts the reference's sorted token-hash arrays and
     * FUSES the exact-Jaccard rescore into the same compiled corpus pass
     * (round 21): the per-doc candidate ref set is rescored in place against
     * the broadcast arrays — two-pointer |inter| over sorted distinct
@@ -334,8 +328,9 @@ object Dedup {
     * a near-dup-dense corpus skips ~15/16 of the intersect work without
     * changing the answer (dirty = EXISTS a qualifying pair). 8M hashes
     * ≈ 64 MB broadcast — the same bounded-reference envelope class as the
-    * band map. Above this (or the band cap) the unfused routes stand.
-    * Mutable only as a test seam (the equality specs force each route).
+    * band map. Above this (or the band cap) the banded-join route runs; it
+    * handles every input.
+    * Mutable only as a test seam (the equality spec forces the join route).
     */
   private[graft] var refTokenBroadcastCap: Long = 8000000L
 
@@ -368,19 +363,11 @@ object Dedup {
           .limit(refBroadcastCap.toInt + 1).collect()
         if (page.length <= refBroadcastCap) page else null
       }
-    if (refBandRows != null) {
-      // broadcast-probe route (guide §8: decide against the small side,
-      // move the big side's rows once): per band, hash -> sorted ref ids
-      val perBand: Array[scala.collection.Map[Long, Array[Long]]] =
-        Array.tabulate(numBands) { b =>
-          refBandRows.iterator.filter(_._1 == b)
-            .toArray.groupBy(_._2)
-            .map { case (h, rows) => h -> rows.map(_._3).sorted }
-        }
-      val bc = spark.sparkContext.broadcast(perBand)
-      // reference token arrays (the rescore's right side) are bounded by
-      // the same assumption; fuse the rescore when they fit the cap
-      val refToks: Array[(Long, Array[Long])] = {
+    // reference token arrays (the rescore's right side) are bounded by the
+    // same assumption; the fused route runs only when they fit the cap too
+    val refToks: Array[(Long, Array[Long])] =
+      if (refBandRows == null) null
+      else {
         val tb = reference.select(col(idCol).cast("long").as("id"),
             sort_array(array_distinct(transform(tokenSet(col(textCol)),
               t => xxhash64(t)))).as("toks"))
@@ -389,124 +376,87 @@ object Dedup {
         if (tb.iterator.map(_._2.length.toLong).sum <= refTokenBroadcastCap) tb
         else null
       }
-      val cand =
-        if (refToks != null) {
-          // FUSED probe + rescore: one compiled pass over (id, bands, toks)
-          val refTokMap = new java.util.HashMap[Long, Array[Long]](refToks.length * 2)
-          refToks.foreach { case (id, t) => refTokMap.put(id, t) }
-          val tc = spark.sparkContext.broadcast(refTokMap)
-          val toksC = corpus.select(col(idCol).cast("long").as("id"),
-              sort_array(array_distinct(transform(tokenSet(col(textCol)),
-                t => xxhash64(t)))).as("__toks"))
-            .filter(size(col("__toks")) > 0)
-          val dirtyIds = sigC.select(col("id").cast("long").as("id"),
-              bandHashArray(numBands).as("__bh"))
-            .join(toksC, Seq("id"))
-            .as[(Long, Seq[Long], Seq[Long])]
-            .mapPartitions { it =>
-              val maps = bc.value
-              val toks = tc.value
-              it.flatMap { case (idA, hs, ta0) =>
-                // gather candidate ref ids across bands, dedupe by sort
-                var total = 0
-                val bufs = new Array[Array[Long]](hs.length)
-                var b = 0
-                while (b < hs.length && b < maps.length) {
-                  val hit = maps(b).getOrElse(hs(b), null)
-                  bufs(b) = hit
-                  if (hit != null) total += hit.length
-                  b += 1
-                }
-                if (total == 0) Iterator.empty
-                else {
-                  val all = new Array[Long](total)
-                  var off = 0
-                  b = 0
-                  while (b < bufs.length) {
-                    val a = bufs(b)
-                    if (a != null) { System.arraycopy(a, 0, all, off, a.length); off += a.length }
-                    b += 1
-                  }
-                  java.util.Arrays.sort(all)
-                  val ta = ta0.toArray
-                  val szA = ta.length
-                  var dirty = false
-                  var i = 0
-                  while (!dirty && i < all.length) {
-                    if (i == 0 || all(i) != all(i - 1)) {
-                      val tbArr = toks.get(all(i))
-                      if (tbArr != null) {
-                        // two-pointer |inter| over sorted distinct arrays —
-                        // the SortedIntersectSize arithmetic, then the same
-                        // double-division threshold cut as the SQL rescore
-                        var x = 0; var y = 0; var inter = 0
-                        while (x < szA && y < tbArr.length) {
-                          val c = java.lang.Long.compare(ta(x), tbArr(y))
-                          if (c == 0) { inter += 1; x += 1; y += 1 }
-                          else if (c < 0) x += 1
-                          else y += 1
-                        }
-                        val j = inter.toDouble / (szA + tbArr.length - inter).toDouble
-                        if (j >= threshold) dirty = true
-                      }
-                    }
-                    i += 1
-                  }
-                  if (dirty) Iterator.single(idA) else Iterator.empty
-                }
-              }
-            }
-          return corpus.join(
-            dirtyIds.toDF(idCol)
-              .select(col(idCol).cast(corpus.schema(idCol).dataType)),
-            Seq(idCol), "left_anti")
-        } else {
-          // probe-only route (reference token arrays exceed the cap):
-          // candidates from the broadcast band map, rescore via the joins
-          sigC.select(col("id").cast("long").as("id"), bandHashArray(numBands).as("__bh"))
-            .as[(Long, Seq[Long])]
-            .mapPartitions { it =>
-              val maps = bc.value
-              it.flatMap { case (idA, hs) =>
-                var total = 0
-                val bufs = new Array[Array[Long]](hs.length)
-                var b = 0
-                while (b < hs.length && b < maps.length) {
-                  val hit = maps(b).getOrElse(hs(b), null)
-                  bufs(b) = hit
-                  if (hit != null) total += hit.length
-                  b += 1
-                }
-                if (total == 0) Iterator.empty
-                else {
-                  // gather + sort + in-place dedupe: output pairs are
-                  // distinct per doc by construction
-                  val all = new Array[Long](total)
-                  var off = 0
-                  b = 0
-                  while (b < bufs.length) {
-                    val a = bufs(b)
-                    if (a != null) { System.arraycopy(a, 0, all, off, a.length); off += a.length }
-                    b += 1
-                  }
-                  java.util.Arrays.sort(all)
-                  val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-                  var i = 0
-                  while (i < all.length) {
-                    if (i == 0 || all(i) != all(i - 1)) out += ((idA, all(i)))
-                    i += 1
-                  }
-                  out.iterator
-                }
-              }
-            }
-            .toDF("id_a", "id_b")
+    if (refToks != null) {
+      // FUSED broadcast probe + rescore (guide §8: decide against the small
+      // side, move the big side's rows once): per band, hash -> sorted ref
+      // ids, and one compiled pass over (id, bands, toks)
+      val perBand: Array[scala.collection.Map[Long, Array[Long]]] =
+        Array.tabulate(numBands) { b =>
+          refBandRows.iterator.filter(_._1 == b)
+            .toArray.groupBy(_._2)
+            .map { case (h, rows) => h -> rows.map(_._3).sorted }
         }
-      val dirty = rescoreJaccardCross(cand, corpus, reference, idCol, textCol)
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a").as(idCol)).distinct()
-      corpus.join(dirty, Seq(idCol), "left_anti")
+      val bc = spark.sparkContext.broadcast(perBand)
+      val refTokMap = new java.util.HashMap[Long, Array[Long]](refToks.length * 2)
+      refToks.foreach { case (id, t) => refTokMap.put(id, t) }
+      val tc = spark.sparkContext.broadcast(refTokMap)
+      val toksC = corpus.select(col(idCol).cast("long").as("id"),
+          sort_array(array_distinct(transform(tokenSet(col(textCol)),
+            t => xxhash64(t)))).as("__toks"))
+        .filter(size(col("__toks")) > 0)
+      val dirtyIds = sigC.select(col("id").cast("long").as("id"),
+          bandHashArray(numBands).as("__bh"))
+        .join(toksC, Seq("id"))
+        .as[(Long, Seq[Long], Seq[Long])]
+        .mapPartitions { it =>
+          val maps = bc.value
+          val toks = tc.value
+          it.flatMap { case (idA, hs, ta0) =>
+            // gather candidate ref ids across bands, dedupe by sort
+            var total = 0
+            val bufs = new Array[Array[Long]](hs.length)
+            var b = 0
+            while (b < hs.length && b < maps.length) {
+              val hit = maps(b).getOrElse(hs(b), null)
+              bufs(b) = hit
+              if (hit != null) total += hit.length
+              b += 1
+            }
+            if (total == 0) Iterator.empty
+            else {
+              val all = new Array[Long](total)
+              var off = 0
+              b = 0
+              while (b < bufs.length) {
+                val a = bufs(b)
+                if (a != null) { System.arraycopy(a, 0, all, off, a.length); off += a.length }
+                b += 1
+              }
+              java.util.Arrays.sort(all)
+              val ta = ta0.toArray
+              val szA = ta.length
+              var dirty = false
+              var i = 0
+              while (!dirty && i < all.length) {
+                if (i == 0 || all(i) != all(i - 1)) {
+                  val tbArr = toks.get(all(i))
+                  if (tbArr != null) {
+                    // two-pointer |inter| over sorted distinct arrays —
+                    // the SortedIntersectSize arithmetic, then the same
+                    // double-division threshold cut as the SQL rescore
+                    var x = 0; var y = 0; var inter = 0
+                    while (x < szA && y < tbArr.length) {
+                      val c = java.lang.Long.compare(ta(x), tbArr(y))
+                      if (c == 0) { inter += 1; x += 1; y += 1 }
+                      else if (c < 0) x += 1
+                      else y += 1
+                    }
+                    val j = inter.toDouble / (szA + tbArr.length - inter).toDouble
+                    if (j >= threshold) dirty = true
+                  }
+                }
+                i += 1
+              }
+              if (dirty) Iterator.single(idA) else Iterator.empty
+            }
+          }
+        }
+      corpus.join(
+        dirtyIds.toDF(idCol)
+          .select(col(idCol).cast(corpus.schema(idCol).dataType)),
+        Seq(idCol), "left_anti")
     } else {
+      // banded-join route: string ids, or a reference above either cap
       val cand = bandHashes(sigC, numBands).as("a")
         .join(bandHashes(sigR, numBands).as("b"),
           col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash"))
@@ -582,19 +532,11 @@ object Dedup {
     * numChunks−1 shares a chunk), then exact popcount filter.
     */
   def simhashPairs(hashes: DataFrame, maxHamming: Int,
-                   numChunks: Int = 4): DataFrame =
+                   numChunks: Int = 4): DataFrame = {
     // materialize the (id, simhash) frame once — 2 longs per doc — so the
     // chunk self-join's two sides read cached blocks instead of re-running
     // the whole simhash pipeline (scan + tf aggregate + 64-lane fold) twice
-    simhashPairsOn(hashes.localCheckpoint(true), maxHamming, numChunks)
-
-  /** [[simhashPairs]] over an ALREADY-materialized hash frame — the
-    * perceptual streaming sinks persist their per-batch hashes, and the
-    * public entry's unconditional localCheckpoint was a redundant second
-    * materialization per micro-batch.
-    */
-  private[graft] def simhashPairsOn(h: DataFrame, maxHamming: Int,
-                                    numChunks: Int = 4): DataFrame = {
+    val h = hashes.localCheckpoint(true)
     val bits = 64 / numChunks
     val mask = (1L << bits) - 1
     val chunked = h.select(col("id"), col("simhash"),
@@ -887,24 +829,6 @@ object Dedup {
         definiteKeep.unionByName(confirmedKeep)
       }
     result.drop("__fp")
-  }
-
-  /** End-to-end SimHash near-dup detection, candidates-then-verify: chunk
-    * blocking + hamming prune proposes, exact Jaccard disposes. Recall is
-    * guaranteed total only within hamming <= numChunks−1 (pigeonhole);
-    * beyond that it degrades with distance — the operator is approximate by
-    * design and the exact rescore keeps its *precision* exact. Use
-    * `minhashNearDupPairs` when near-total recall at a Jaccard threshold is
-    * required (word-level SimHash distance correlates loosely with set
-    * Jaccard on short documents).
-    */
-  def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          threshold: Double, maxHamming: Int = 24,
-                          numChunks: Int = 8): DataFrame = {
-    val cand = simhashPairs(simhash(df, idCol, textCol), maxHamming, numChunks)
-      .select("id_a", "id_b")
-    rescoreJaccard(cand, df, idCol, textCol)
-      .filter(col("jaccard") >= threshold)
   }
 
   /** WITHIN-document duplicated-span removal, the exact-substring dedup of

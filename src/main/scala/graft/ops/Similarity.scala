@@ -269,7 +269,8 @@ object Similarity {
   /** Frozen PQ model: the per-subspace codebook plus geometry. Built once
     * (pqTrain), shipped to executors inside encode/search closures — a few
     * KB, like the IVF codebook — and REUSED verbatim by the streaming face
-    * (AnnIndexSink), so stream- and batch-encoded codes are bit-identical.
+    * (VectorIndexSink's PQ codec), so stream- and batch-encoded codes are
+    * bit-identical.
     */
   case class PqModel(cb: Array[Array[Double]], numSubspaces: Int,
                      numCodes: Int, dim: Int) extends Serializable {
@@ -470,7 +471,7 @@ object Similarity {
   /** Per-vector SQ8 encode → (id, codes, __n2): codes = round(v / scale)
     * with scale = max|v| / 127, __n2 the integer self-dot the code cosine
     * divides by. Stateless per row (no trained model), which is what makes
-    * the streaming face trivial — see `streaming.Int8IndexSink`.
+    * the streaming face trivial — see `streaming.VectorCodec.Sq8`.
     */
   def int8Encode(corpus: DataFrame, idCol: String, vecCol: String,
                  keepVec: Boolean = false): DataFrame = {
@@ -534,7 +535,7 @@ object Similarity {
 
   /** SQ8 search over a pre-encoded table: integer code-cosine shortlist,
     * exact re-rank against `vecs` (vid, v). Shared by the batch `int8TopK`
-    * and the streaming `Int8IndexSink.topK`, so both return identical
+    * and the streaming SQ8 `VectorIndexSink.topK`, so both return identical
     * results by construction.
     */
   def int8Search(enc: DataFrame, vecs: DataFrame,

@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Shared state-directory probing for the append-only parquet index sinks
-  * ([[NearDupSink]], [[ImageNearDupSink]], [[AnnIndexSink]],
-  * [[Int8IndexSink]]).
+  * ([[BandedIndexSink]], [[VectorIndexSink]]).
   */
 private[streaming] object IndexDirs {
 

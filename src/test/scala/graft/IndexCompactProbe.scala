@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.ops.Multimodal
-import graft.streaming.ImageNearDupSink
+import graft.streaming.{BandedIndexSink, BandingScheme}
 
 /** Streaming-index compaction probe (test scope): how does a micro-batch's
   * PROBE cost grow with accumulated batch count, and what does an
@@ -49,18 +49,18 @@ object IndexCompactProbe {
     import spark.implicits._
 
     val stateDir = java.nio.file.Files.createTempDirectory("graft-idx-probe").toString
-    val sink = new ImageNearDupSink(spark, stateDir)
+    val sink = new BandedIndexSink(spark, stateDir, BandingScheme.image())
     val index = s"$stateDir/chunk_index"
     def images(ids: Seq[Long]) =
       Multimodal.syntheticImages(ids.toDF("doc_id"), "doc_id")
     // seed: group 0's base, so every probe's near-dup half has a
     // historical match to find
-    sink.process(images(Seq(0L)), 0L)
+    sink.process(images(Seq(0L)), "doc_id", "media", 0L)
     // the probe batch: one near-dup of the seeded base (id 1, group 0
     // variant — dropped each time, so it never enters state) + one
     // fresh-per-probe id from a group no other batch ever uses (kept)
     def probe(batchId: Long, freshId: Long) = {
-      val kept = sink.process(images(Seq(1L, freshId)), batchId)
+      val kept = sink.process(images(Seq(1L, freshId)), "doc_id", "media", batchId)
         .collect().map(_.getLong(0)).toSet
       require(kept == Set(freshId), s"probe semantics drifted: $kept")
     }
@@ -71,7 +71,7 @@ object IndexCompactProbe {
       while (done < n) {
         // two fresh group BASES per batch (ids 8k+8, 8k+12 -> groups 2k+2,
         // 2k+3, never variants), so every image is kept and state grows
-        sink.process(images(Seq(8L * done + 8L, 8L * done + 12L)), done.toLong + 1L)
+        sink.process(images(Seq(8L * done + 8L, 8L * done + 12L)), "doc_id", "media", done.toLong + 1L)
         done += 1
       }
       val filesBefore = parquetFiles(index)

@@ -124,13 +124,14 @@ class DedupSimilaritySpec extends SparkSpec {
     // is reachable (see the non-convergence test below)
   }
 
-  test("minhashDedupAgainst: fused == probe+rescore == banded-join routes") {
-    // all three routes bucket by the same xxhash64 band hashes and dispose
-    // by the same exact Jaccard, so the surviving corpus must be
-    // row-identical whichever route runs; the fuzz corpus below has dense
-    // partial overlaps plus isolated docs. Routes are forced via the two
-    // cap seams: default = fused probe+rescore single pass; token cap 0 =
-    // broadcast probe + join rescore; band cap 0 = banded equi-join.
+  test("minhashDedupAgainst: fused == banded-join routes") {
+    // both routes bucket by the same xxhash64 band hashes and dispose by
+    // the same exact Jaccard, so the surviving corpus must be row-identical
+    // whichever route runs; the fuzz corpus below has dense partial
+    // overlaps plus isolated docs. Routes are forced via the two cap seams:
+    // default = fused probe+rescore single pass; band cap 0 = banded
+    // equi-join; token cap 0 (reference token arrays above their cap) must
+    // also take the banded join.
     val rng = new scala.util.Random(11)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta",
       "eta", "theta", "iota", "kappa")
@@ -144,14 +145,14 @@ class DedupSimilaritySpec extends SparkSpec {
     val fused = rows(Dedup.minhashDedupAgainst(corpus, ref, "doc_id", "text", 0.6))
     val prevTok = Dedup.refTokenBroadcastCap
     Dedup.refTokenBroadcastCap = 0L
-    val probe = try rows(Dedup.minhashDedupAgainst(corpus, ref, "doc_id", "text", 0.6))
+    val overTokCap = try rows(Dedup.minhashDedupAgainst(corpus, ref, "doc_id", "text", 0.6))
       finally Dedup.refTokenBroadcastCap = prevTok
     val prev = Dedup.refBroadcastCap
     Dedup.refBroadcastCap = 0L
     val join = try rows(Dedup.minhashDedupAgainst(corpus, ref, "doc_id", "text", 0.6))
       finally Dedup.refBroadcastCap = prev
-    assert(fused == join && probe == join && fused.nonEmpty && fused.size < 96,
-      s"fused=${fused.size} probe=${probe.size} join=${join.size} of 96 corpus docs")
+    assert(fused == join && overTokCap == join && fused.nonEmpty && fused.size < 96,
+      s"fused=${fused.size} overTokCap=${overTokCap.size} join=${join.size} of 96 corpus docs")
   }
 
   test("minhashDedupAgainst: string ids route through the banded join") {

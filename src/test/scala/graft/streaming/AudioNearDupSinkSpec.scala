@@ -1,47 +1,27 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import graft.SparkSpec
 import graft.ops.Multimodal
 import org.apache.spark.sql.DataFrame
 
-/** The audio face of the shared [[PerceptualNearDupSink]] engine: the
-  * fingerprint swaps in, everything else (first-wins, bucket-pruned
-  * probes, replay fencing) is the engine already pinned by
-  * [[ImageNearDupSinkSpec]] — this suite checks the audio-specific wiring
-  * end-to-end.
+/** The audio row of the banded-sink contracts: the PCM fingerprint swaps
+  * in, and first-wins, bucket-pruned probes and replay fencing hold
+  * end-to-end exactly as for images and text.
   */
-class AudioNearDupSinkSpec extends SparkSpec {
+class AudioNearDupSinkSpec
+    extends BandedSinkContracts("audio near-dups", "clips", "non-audio payloads") {
   import spark.implicits._
 
   private def audio(ids: Seq[Long]): DataFrame =
     Multimodal.syntheticAudio(ids.toDF("doc_id"), "doc_id")
 
-  test("cross-batch and intra-batch audio near-dups drop; distant clips pass") {
-    val dir = Files.createTempDirectory("graft-auddup").toString
-    val sink = new AudioNearDupSink(spark, dir)
-    // 0 and 1 are variants of one waveform (intra-batch, smaller id
-    // wins); 40 is an unrelated group
-    val kept0 = sink.process(audio(Seq(0L, 1L, 40L)), 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept0 === Set(0L, 40L))
-    // 2 is another variant of kept clip 0 (historical dup); 80 is fresh
-    val kept1 = sink.process(audio(Seq(2L, 80L)), 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept1 === Set(80L))
-    // checkpoint replay of batch 1 reproduces its kept set (fencing)
-    val replay = sink.process(audio(Seq(2L, 80L)), 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(replay === kept1)
-  }
-
-  test("non-audio payloads pass the gate (they duplicate nothing)") {
-    val dir = Files.createTempDirectory("graft-auddup-raw").toString
-    val sink = new AudioNearDupSink(spark, dir)
-    val batch = audio(Seq(0L)).unionByName(
-      Seq((99L, "not audio at all".getBytes("UTF-8"))).toDF("doc_id", "media"))
-    val kept = sink.process(batch, 0L).collect().map(_.getLong(0)).toSet
-    assert(kept === Set(0L, 99L))
-  }
+  protected def contract: SinkContract = SinkContract(
+    BandingScheme.audio(), "doc_id", "media",
+    // 0 and 1 are variants of one waveform (intra-batch, smaller id wins);
+    // 40 is an unrelated group; 2 is another variant of kept clip 0
+    // (historical dup); 80 is fresh
+    cross = Seq(audio(Seq(0L, 1L, 40L)) -> Set(0L, 40L),
+      audio(Seq(2L, 80L)) -> Set(80L)),
+    keyed = audio(Seq(0L)),
+    keyless = Seq((99L, "not audio at all".getBytes("UTF-8"))).toDF("doc_id", "media"),
+    replay = (audio(Seq(0L, 1L, 40L)), audio(Seq(2L, 80L)), Set(80L)))
 }

@@ -173,7 +173,7 @@ class CurationStreamSpec extends SparkSpec {
     // the streamed index must encode every later batch with it verbatim
     val model = Similarity.pqTrain(corpus, "vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-ann").toString
-    val sink = new AnnIndexSink(spark, dir, model)
+    val sink = new VectorIndexSink(spark, dir, VectorCodec.Pq(model))
     val rows = corpus.select("vec_id", "embedding")
       .as[EmbRow].collect().toSeq
     val input = MemoryStream[EmbRow](spark)
@@ -203,7 +203,7 @@ class CurationStreamSpec extends SparkSpec {
     // no model to freeze: the per-vector scale makes every batch encode
     // independently, so the index accumulates by pure appends
     val dir = java.nio.file.Files.createTempDirectory("graft-sq8").toString
-    val sink = new Int8IndexSink(spark, dir)
+    val sink = new VectorIndexSink(spark, dir, VectorCodec.Sq8)
     val rows = corpus.select("vec_id", "embedding")
       .as[EmbRow].collect().toSeq
     val input = MemoryStream[EmbRow](spark)

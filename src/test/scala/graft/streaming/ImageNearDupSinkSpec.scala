@@ -2,71 +2,46 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.SparkSpec
 import graft.ops.Multimodal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental dHash image dedup (round-17 verdict item 3's streaming
-  * face): cross-batch near-dup images drop against the append-only chunk
-  * index, first-wins holds, replay is idempotent, and the stream-kept set
-  * equals the batch first-wins fold over the same corpus.
+  * face): the image row of the banded-sink contracts (cross-batch near-dup
+  * images drop against the append-only chunk index, first-wins holds,
+  * replay is idempotent), plus the stream-kept set equals the batch
+  * first-wins fold over the same corpus.
   */
-class ImageNearDupSinkSpec extends SparkSpec {
+class ImageNearDupSinkSpec
+    extends BandedSinkContracts("image near-dups", "images",
+      "non-decodable payloads") {
   import spark.implicits._
 
   /** doc_ids 0..3 are one planted near-dup group, 4..7 the next, etc. */
   private def images(ids: Seq[Long]): DataFrame =
     Multimodal.syntheticImages(ids.toDF("doc_id"), "doc_id")
 
-  test("cross-batch and intra-batch image near-dups drop; distant images pass") {
-    val dir = Files.createTempDirectory("graft-imgdup").toString
-    val sink = new ImageNearDupSink(spark, dir)
+  protected def contract: SinkContract = SinkContract(
+    BandingScheme.image(), "doc_id", "media",
+    // batch 0: 0 and 1 are variants of one pattern (intra-batch, smaller id
+    // wins); 40 is an unrelated group. batch 1: 2 is another variant of
+    // kept image 0 (historical dup); 80 is a fresh group
+    cross = Seq(images(Seq(0L, 1L, 40L)) -> Set(0L, 40L),
+      images(Seq(2L, 80L)) -> Set(80L)),
+    keyed = images(Seq(0L)),
+    keyless = Seq((99L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "media"),
+    // 1 is a historical dup of 0
+    replay = (images(Seq(0L)), images(Seq(1L, 80L)), Set(80L)))
 
-    // batch 0: 0 and 1 are variants of one pattern (intra-batch, smaller
-    // id wins); 40 is an unrelated group
-    val kept0 = sink.process(images(Seq(0L, 1L, 40L)), batchId = 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept0 === Set(0L, 40L))
-
-    // batch 1: 2 is another variant of kept image 0 (historical dup);
-    // 80 is a fresh group
-    val kept1 = sink.process(images(Seq(2L, 80L)), batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept1 === Set(80L))
-  }
-
-  test("non-decodable payloads pass the gate (they duplicate nothing)") {
-    val dir = Files.createTempDirectory("graft-imgdup-raw").toString
-    val sink = new ImageNearDupSink(spark, dir)
-    val batch = images(Seq(0L)).unionByName(
-      Seq((99L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "media"))
-    val kept = sink.process(batch, batchId = 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept === Set(0L, 99L))
-  }
-
-  test("a replayed batch reproduces its kept set") {
-    val dir = Files.createTempDirectory("graft-imgdup-replay").toString
-    val sink = new ImageNearDupSink(spark, dir)
-    sink.process(images(Seq(0L)), batchId = 0L)
-
-    val first = sink.process(images(Seq(1L, 80L)), batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(first === Set(80L))   // 1 is a historical dup of 0
-
-    val replay = sink.process(images(Seq(1L, 80L)), batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(replay === first, "replay must fence out its own first append")
-  }
+  private def sinkAt(dir: String) = new BandedIndexSink(spark, dir, BandingScheme.image())
 
   test("stream-kept equals the batch fold with the sink's semantics (arrival = id order)") {
     val ids = (0L until 48L)
     val dir = Files.createTempDirectory("graft-imgdup-eq").toString
-    val sink = new ImageNearDupSink(spark, dir)
+    val sink = sinkAt(dir)
     val batches = ids.grouped(12).toSeq
     val streamKept = batches.zipWithIndex.flatMap { case (chunk, bi) =>
-      sink.process(images(chunk), batchId = bi.toLong)
+      sink.process(images(chunk), "doc_id", "media", batchId = bi.toLong)
         .collect().map(_.getLong(0))
     }.toSet
 
@@ -93,9 +68,9 @@ class ImageNearDupSinkSpec extends SparkSpec {
     // per-doc arrival (batch size 1) reduces to the ideal greedy fold:
     // only kept docs can veto
     val dir1 = Files.createTempDirectory("graft-imgdup-eq1").toString
-    val sink1 = new ImageNearDupSink(spark, dir1)
+    val sink1 = sinkAt(dir1)
     val oneByOne = ids.zipWithIndex.flatMap { case (id, bi) =>
-      sink1.process(images(Seq(id)), batchId = bi.toLong)
+      sink1.process(images(Seq(id)), "doc_id", "media", batchId = bi.toLong)
         .collect().map(_.getLong(0))
     }.toSet
     val ideal = ids.foldLeft(Set.empty[Long]) { (k, id) =>
@@ -107,14 +82,14 @@ class ImageNearDupSinkSpec extends SparkSpec {
   test("an all-undecodable first batch does not poison the chunk index") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-imgdup-nohash").toString
-    val sink = new ImageNearDupSink(spark, dir)
+    val sink = sinkAt(dir)
     val rawOnly = Seq((1L, "jpeg-ish".getBytes("UTF-8")),
       (2L, "png-ish".getBytes("UTF-8"))).toDF("doc_id", "media")
-    assert(sink.process(rawOnly, batchId = 0L)
+    assert(sink.process(rawOnly, "doc_id", "media", batchId = 0L)
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
     // the zero-row append must not make the NEXT batch read a schema-less
     // parquet dir (the _SUCCESS-only state trap)
-    val kept1 = sink.process(images(Seq(0L, 1L)), batchId = 1L)
+    val kept1 = sink.process(images(Seq(0L, 1L)), "doc_id", "media", batchId = 1L)
       .collect().map(_.getLong(0)).toSet
     assert(kept1 === Set(0L))
   }

@@ -19,6 +19,12 @@ class IndexCompactionSpec extends SparkSpec {
   private def images(ids: Seq[Long]): DataFrame =
     Multimodal.syntheticImages(ids.toDF("doc_id"), "doc_id")
 
+  private def image(dir: String, autoCompactEvery: Int = 0) =
+    new BandedIndexSink(spark, dir, BandingScheme.image(), autoCompactEvery = autoCompactEvery)
+
+  private def sq8(dir: String, autoCompactEvery: Int = 0) =
+    new VectorIndexSink(spark, dir, VectorCodec.Sq8, autoCompactEvery)
+
   private def parquetFiles(dir: String): Int = {
     val root = new java.io.File(dir)
     def walk(f: java.io.File): Int =
@@ -30,15 +36,15 @@ class IndexCompactionSpec extends SparkSpec {
   test("image sink: compaction midway changes nothing but the file count") {
     val dirA = Files.createTempDirectory("graft-cmp-a").toString
     val dirB = Files.createTempDirectory("graft-cmp-b").toString
-    val a = new ImageNearDupSink(spark, dirA)   // compacted midway
-    val b = new ImageNearDupSink(spark, dirB)   // never compacted
+    val a = image(dirA)   // compacted midway
+    val b = image(dirB)   // never compacted
     // 8 batches: fresh group bases, planted variants, repeats
     val batches = Seq(
       Seq(0L, 40L), Seq(1L, 80L), Seq(41L, 120L), Seq(2L, 160L),
       Seq(81L, 200L), Seq(3L, 42L), Seq(121L, 161L), Seq(201L, 240L))
     batches.zipWithIndex.foreach { case (ids, i) =>
-      val ka = a.process(images(ids), i.toLong).collect().map(_.getLong(0)).toSet
-      val kb = b.process(images(ids), i.toLong).collect().map(_.getLong(0)).toSet
+      val ka = a.process(images(ids), "doc_id", "media", i.toLong).collect().map(_.getLong(0)).toSet
+      val kb = b.process(images(ids), "doc_id", "media", i.toLong).collect().map(_.getLong(0)).toSet
       assert(ka === kb, s"batch $i diverged before any compaction effect")
       if (i == 3) {
         val before = parquetFiles(s"$dirA/chunk_index")
@@ -62,13 +68,13 @@ class IndexCompactionSpec extends SparkSpec {
 
   test("image sink: the replay fence survives compaction") {
     val dir = Files.createTempDirectory("graft-cmp-replay").toString
-    val sink = new ImageNearDupSink(spark, dir)
-    val kept0 = sink.process(images(Seq(0L, 1L)), 0L).collect().map(_.getLong(0)).toSet
-    val kept1 = sink.process(images(Seq(2L, 80L)), 1L).collect().map(_.getLong(0)).toSet
+    val sink = image(dir)
+    val kept0 = sink.process(images(Seq(0L, 1L)), "doc_id", "media", 0L).collect().map(_.getLong(0)).toSet
+    val kept1 = sink.process(images(Seq(2L, 80L)), "doc_id", "media", 1L).collect().map(_.getLong(0)).toSet
     sink.compact()
     // replaying batch 1 after compaction must reproduce its kept set: the
     // compacted rows still carry __batch, so the probe sees only batch 0
-    val replay = sink.process(images(Seq(2L, 80L)), 1L).collect().map(_.getLong(0)).toSet
+    val replay = sink.process(images(Seq(2L, 80L)), "doc_id", "media", 1L).collect().map(_.getLong(0)).toSet
     assert(replay === kept1, s"replay diverged post-compaction: $replay vs $kept1")
     assert(kept0 === Set(0L))
   }
@@ -77,7 +83,7 @@ class IndexCompactionSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 90)
     val dir = Files.createTempDirectory("graft-cmp-sq8").toString
-    val sink = new Int8IndexSink(spark, dir)
+    val sink = sq8(dir)
     (0 until 3).foreach { i =>
       sink.process(
         corpus.filter(col("vec_id") >= i * 30L && col("vec_id") < (i + 1) * 30L)
@@ -107,14 +113,14 @@ class IndexCompactionSpec extends SparkSpec {
   test("autoCompactEvery folds the index in-stream with identical results") {
     val dirA = Files.createTempDirectory("graft-auto-a").toString
     val dirB = Files.createTempDirectory("graft-auto-b").toString
-    val a = new ImageNearDupSink(spark, dirA, autoCompactEvery = 2)
-    val b = new ImageNearDupSink(spark, dirB)
+    val a = image(dirA, autoCompactEvery = 2)
+    val b = image(dirB)
     val batches = Seq(
       Seq(0L, 40L), Seq(1L, 80L), Seq(41L, 120L), Seq(2L, 160L),
       Seq(81L, 200L), Seq(3L, 42L))
     batches.zipWithIndex.foreach { case (ids, i) =>
-      val ka = a.process(images(ids), i.toLong).collect().map(_.getLong(0)).toSet
-      val kb = b.process(images(ids), i.toLong).collect().map(_.getLong(0)).toSet
+      val ka = a.process(images(ids), "doc_id", "media", i.toLong).collect().map(_.getLong(0)).toSet
+      val kb = b.process(images(ids), "doc_id", "media", i.toLong).collect().map(_.getLong(0)).toSet
       assert(ka === kb, s"batch $i diverged under auto-compaction")
     }
     assert(parquetFiles(s"$dirA/chunk_index") < parquetFiles(s"$dirB/chunk_index"),
@@ -136,8 +142,9 @@ class IndexCompactionSpec extends SparkSpec {
       (0 until 30).map(i => words((seed * 7 + i * 3) % words.size)).mkString(" ")
     val (tA, tB) = (Files.createTempDirectory("graft-auto-ta").toString,
       Files.createTempDirectory("graft-auto-tb").toString)
-    val sa = new NearDupSink(spark, tA, threshold = 0.9, autoCompactEvery = 2)
-    val sb = new NearDupSink(spark, tB, threshold = 0.9)
+    val sa = new BandedIndexSink(spark, tA, BandingScheme.MinHash(threshold = 0.9),
+      autoCompactEvery = 2)
+    val sb = new BandedIndexSink(spark, tB, BandingScheme.MinHash(threshold = 0.9))
     val textBatches = Seq(
       Seq((1L, text(1)), (2L, text(2))), Seq((3L, text(1)), (4L, text(3))),
       Seq((5L, text(2)), (6L, text(4))), Seq((7L, text(5)), (8L, text(4))))
@@ -160,12 +167,12 @@ class IndexCompactionSpec extends SparkSpec {
     val model = Similarity.pqTrain(full, "vec_id", "embedding")
     val (pA, pB) = (Files.createTempDirectory("graft-auto-pa").toString,
       Files.createTempDirectory("graft-auto-pb").toString)
-    val annA = new AnnIndexSink(spark, pA, model, autoCompactEvery = 2)
-    val annB = new AnnIndexSink(spark, pB, model)
+    val annA = new VectorIndexSink(spark, pA, VectorCodec.Pq(model), autoCompactEvery = 2)
+    val annB = new VectorIndexSink(spark, pB, VectorCodec.Pq(model))
     val (qA, qB) = (Files.createTempDirectory("graft-auto-qa").toString,
       Files.createTempDirectory("graft-auto-qb").toString)
-    val sqA = new Int8IndexSink(spark, qA, autoCompactEvery = 2)
-    val sqB = new Int8IndexSink(spark, qB)
+    val sqA = sq8(qA, autoCompactEvery = 2)
+    val sqB = sq8(qB)
     // 6 batches so the append-only twin necessarily exceeds the compacted
     // sink's 4-file target even at one file per append
     (0 until 6).foreach { i =>
@@ -190,7 +197,7 @@ class IndexCompactionSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 60)
     val dir = Files.createTempDirectory("graft-cmp-crash2").toString
-    val sink = new Int8IndexSink(spark, dir)
+    val sink = sq8(dir)
     sink.process(corpus.filter(col("vec_id") < 30)
       .select(col("vec_id"), col("embedding")), "vec_id", "embedding", 0L)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -210,7 +217,7 @@ class IndexCompactionSpec extends SparkSpec {
     // come from a sibling sink so the parquet schema is byte-identical.
     assert(fs.rename(p, old))
     val dir2 = Files.createTempDirectory("graft-cmp-crash2b").toString
-    val sink2 = new Int8IndexSink(spark, dir2)
+    val sink2 = sq8(dir2)
     sink2.process(corpus.filter(col("vec_id") >= 45)
       .select(col("vec_id"), col("embedding")), "vec_id", "embedding", 2L)
     fs.mkdirs(p)

@@ -49,17 +49,17 @@ class IndexDirsSpec extends SparkSpec {
     // simulate a first append that died before any task committed
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/chunk_index/_temporary/0"))
 
-    val sink = new ImageNearDupSink(spark, stateDir)
+    val sink = new BandedIndexSink(spark, stateDir, BandingScheme.image())
     import spark.implicits._
     def imgs(ids: Seq[Long]) =
       Multimodal.syntheticImages(ids.toDF("doc_id"), "doc_id")
 
     // batch 0 must see "no state" (not a schema-less read) and keep the
     // group bases; batch 1 then probes real state
-    val kept0 = sink.process(imgs(Seq(0L, 1L)), 0L)
+    val kept0 = sink.process(imgs(Seq(0L, 1L)), "doc_id", "media", 0L)
       .collect().map(_.getLong(0)).toSet
     assert(kept0 === Set(0L), s"variant 1 near-dups its base: $kept0")
-    val kept1 = sink.process(imgs(Seq(2L, 40L)), 1L)
+    val kept1 = sink.process(imgs(Seq(2L, 40L)), "doc_id", "media", 1L)
       .collect().map(_.getLong(0)).toSet
     assert(kept1 === Set(40L), s"doc 2 dups doc 0's group, 40 is fresh: $kept1")
   }

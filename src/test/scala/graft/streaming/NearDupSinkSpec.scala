@@ -1,65 +1,29 @@
 package graft.streaming
 
-import java.nio.file.Files
-import graft.SparkSpec
-
-/** Incremental MinHash-LSH dedup: cross-batch near-dups drop against the
-  * append-only band index, first-wins ordering holds, and a replayed batch
-  * (crash-recovery path) reproduces its original kept set.
+/** Incremental MinHash-LSH dedup: the text row of the banded-sink contracts
+  * — cross-batch near-dups drop against the append-only band index,
+  * first-wins ordering holds, and a replayed batch (crash-recovery path)
+  * reproduces its original kept set.
   */
-class NearDupSinkSpec extends SparkSpec {
+class NearDupSinkSpec extends BandedSinkContracts("near-dups", "docs", "zero-token docs") {
   import spark.implicits._
 
   private val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
   private val textB = "completely different content about distributed query engines and shuffles"
   private val textC = "zebra yak xylophone walrus vulture under violet umbrellas singing quietly"
 
-  test("cross-batch and intra-batch near-dups drop; distant docs pass") {
-    val dir = Files.createTempDirectory("graft-neardup").toString
-    val sink = new NearDupSink(spark, dir, threshold = 0.9)
+  private def docs(rows: (Long, String)*) = rows.toDF("id", "text")
 
-    // batch 0: doc 2 is an exact dup of doc 1 (intra-batch, smaller id wins)
-    val kept0 = sink.process(
-      Seq((1L, textA), (2L, textA), (3L, textB)).toDF("id", "text"),
-      "id", "text", batchId = 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept0 == Set(1L, 3L))
-
-    // batch 1: doc 4 duplicates batch 0's kept doc 1 (historical), doc 5 is new
-    val kept1 = sink.process(
-      Seq((4L, textA), (5L, textC)).toDF("id", "text"),
-      "id", "text", batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept1 == Set(5L))
-  }
-
-  test("zero-token docs pass the gate (they duplicate nothing)") {
-    val dir = Files.createTempDirectory("graft-neardup-empty").toString
-    val sink = new NearDupSink(spark, dir, threshold = 0.9)
-    val kept = sink.process(
-      Seq((1L, textA), (2L, ""), (3L, "  \t ")).toDF("id", "text"),
-      "id", "text", batchId = 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 2L, 3L))
-  }
-
-  test("a replayed batch reproduces its kept set (crash between append and commit)") {
-    val dir = Files.createTempDirectory("graft-neardup-replay").toString
-    val sink = new NearDupSink(spark, dir, threshold = 0.9)
-    sink.process(Seq((1L, textA)).toDF("id", "text"), "id", "text", batchId = 0L)
-
-    val first = sink.process(
-      Seq((2L, textB), (3L, textA)).toDF("id", "text"),
-      "id", "text", batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(first == Set(2L))   // 3 is a historical dup of 1
-
-    // replay batch 1: its own batch-1 index entries must be fenced out, so
-    // doc 2 is kept again instead of matching itself
-    val replay = sink.process(
-      Seq((2L, textB), (3L, textA)).toDF("id", "text"),
-      "id", "text", batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(replay == first, s"replay diverged: $replay vs $first")
-  }
+  protected def contract: SinkContract = SinkContract(
+    BandingScheme.MinHash(threshold = 0.9), "id", "text",
+    // batch 0: doc 2 is an exact dup of doc 1 (intra-batch, smaller id
+    // wins); batch 1: doc 4 duplicates batch 0's kept doc 1 (historical),
+    // doc 5 is new
+    cross = Seq(
+      docs((1L, textA), (2L, textA), (3L, textB)) -> Set(1L, 3L),
+      docs((4L, textA), (5L, textC)) -> Set(5L)),
+    keyed = docs((1L, textA)),
+    keyless = docs((2L, ""), (3L, "  \t ")),
+    // 3 is a historical dup of 1
+    replay = (docs((1L, textA)), docs((2L, textB), (3L, textA)), Set(2L)))
 }
