@@ -30,23 +30,31 @@ object Tables {
     * for file listings). The first load of a path in a JVM still infers,
     * so layout adaptivity (see [[events]]) is unchanged.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Long, org.apache.spark.sql.types.StructType)]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // key on (path, mtime) so an in-session rewrite of a table file
-    // re-infers instead of silently applying a stale schema (round-20
-    // ADVICE); one local-FS stat per load, ~none of the ~60 ms the memo
-    // saves. A vanished path falls through to the bare read's own error.
-    val mtime =
+    // memo entry = path -> (mtime, length, schema): an in-session rewrite of
+    // a table file re-infers instead of silently applying a stale schema
+    // (round-20 ADVICE), also when the rewrite keeps the old mtime but not
+    // the old length; the new stat replaces the entry, so there is one per
+    // path. One local-FS stat per load, ~none of the ~60 ms the memo saves.
+    // A vanished path falls through to the bare read's own error.
+    val (mtime, length) =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).getModificationTime
-      } catch { case _: java.io.IOException => -1L }
-    val sch = schemaMemo.computeIfAbsent(s"$path@$mtime",
-      _ => spark.read.parquet(path).schema)
+        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+        (st.getModificationTime, st.getLen)
+      } catch { case _: java.io.IOException => (-1L, -1L) }
+    val memo = schemaMemo.get(path)
+    val sch =
+      if (memo != null && memo._1 == mtime && memo._2 == length) memo._3
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemaMemo.put(path, (mtime, length, inferred))
+        inferred
+      }
     spark.read.schema(sch).parquet(path)
   }
 

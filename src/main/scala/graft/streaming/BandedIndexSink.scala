@@ -126,7 +126,7 @@ class BandedIndexSink(spark: SparkSession, stateDir: String,
 
   // Hadoop FS probe, not java.io.File: on an HDFS/object-store stateDir a
   // local-file probe is always false, silently disabling every historical
-  // near-dup check (cf. UpsertSink.fs)
+  // near-dup check
   // state exists only when actual parquet data does: `_SUCCESS`-only
   // (zero-row append) and `_temporary`-only (crashed append) leftovers
   // must not count — see IndexDirs.hasData

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.connector.{GraftCatalog, TableLog}
 
-/** [[UpsertStateStore]] backed by a [[graft.connector.GraftCatalog]] table:
-  * each micro-batch's rewritten rows land through a real SQL `MERGE INTO`
-  * (DSv2 row-level operation, copy-on-write) instead of bespoke directory
-  * surgery — the table-format MERGE backend the sink's seam was designed
-  * for, with zero extra dependencies. What the lakehouse transaction layer
-  * buys here: atomic commit via the manifest CAS (nothing to `recover()`),
-  * snapshot isolation for readers concurrent with merges, version history
-  * until vacuum, and the state table is queryable/time-travelable as
-  * `<catalog>.state` by any Spark SQL session sharing the conf.
+/** [[UpsertSink]]'s state store: a [[graft.connector.GraftCatalog]] table
+  * whose rows are `(data columns, __bucket, __seq, __deleted)`, written by
+  * a real SQL `MERGE INTO` (DSv2 row-level operation) per micro-batch. What
+  * the lakehouse transaction layer gives: atomic commit via the manifest
+  * CAS (a crash mid-merge leaves the previous version intact and at worst
+  * an unreferenced staging dir for vacuum; checkpointed replay redoes the
+  * merge), snapshot isolation for readers concurrent with merges, version
+  * history until vacuum, and the state table is queryable/time-travelable
+  * as `<catalog>.state` by any Spark SQL session sharing the conf.
   *
   * Rewrite granularity: the catalog's copy-on-write group is one manifest
   * data dir, pruned by committed per-dir column stats against target-only
@@ -22,14 +22,13 @@ import graft.connector.{GraftCatalog, TableLog}
   * because the bucket is a pure function of the key and every source row
   * comes from a touched bucket, so matched pairs are unaffected) — each
   * batch then rewrites only the dirs whose bucket range intersects the
-  * touched set, approaching the bucket stores' O(touched) as dirs cluster
-  * by bucket over time. [[BucketSwapStore]]/[[SnapshotStore]] remain the
-  * strictly-bounded paths. Reference durability contract: the per-block
-  * transactional upsert, stream_blocks.py:108-115.
+  * touched set, and every other dir stays in the manifest as it was.
+  * Reference durability contract: the per-block transactional upsert,
+  * stream_blocks.py:108-115.
   */
 class CatalogMergeStore(spark: SparkSession, stateDir: String,
                         keys: Seq[String],
-                        mergeOnRead: Boolean = false) extends UpsertStateStore {
+                        mergeOnRead: Boolean = false) extends Serializable {
   import UpsertSink.BucketCol
 
   /** One catalog per state dir (the name encodes the dir so two sinks never
@@ -49,16 +48,13 @@ class CatalogMergeStore(spark: SparkSession, stateDir: String,
   private def log =
     new TableLog(s"$stateDir/state", spark.sparkContext.hadoopConfiguration)
 
-  /** Manifest creation is the atomic commit point — a crash mid-merge
-    * leaves the previous version intact and at worst an unreferenced
-    * staging dir for vacuum; checkpointed replay redoes the merge.
-    */
-  def recover(): Unit = ()
-
+  /** True when a committed state version exists. */
   def hasState: Boolean = log.exists && log.latestVersion.nonEmpty
 
-  def read(touched: Option[Seq[Int]]): Option[DataFrame] = {
-    if (!hasState) return None
+  /** Current state including the bookkeeping columns, pruned to the
+    * `touched` buckets (None = all buckets). Call only when [[hasState]].
+    */
+  def read(touched: Option[Seq[Int]]): DataFrame = {
     // read the pinned snapshot's parquet dirs directly rather than through
     // the catalog table: every dir a manifest lists is immutable, so this
     // is the same snapshot-isolated row set — but the MERGE source plan then
@@ -86,16 +82,18 @@ class CatalogMergeStore(spark: SparkSession, stateDir: String,
               .parquet(entries.map(_.dir): _*),
             entries, spark.sparkContext.hadoopConfiguration),
           graft.connector.ColumnMapping.inverseMap(log.schema))
-    Some(touched match {
+    touched match {
       // the bucket filter reaches the parquet scan (row-group stats skip
-      // untouched data); dedicated bucket dirs stay the bucket stores'
-      // specialty, so this read is pruned, not strictly bounded
+      // untouched data), so this read is pruned, not strictly bounded
       case Some(ks) => t.filter(col(BucketCol).isin(ks.map(Int.box): _*))
       case None => t
-    })
+    }
   }
 
-  def commit(next: DataFrame, touched: Seq[Int], batchId: Long): Unit = {
+  /** Install `next` — every surviving row of exactly the `touched` buckets —
+    * with one MERGE gated to those buckets.
+    */
+  def commit(next: DataFrame, touched: Seq[Int]): Unit = {
     // under foreachBatch the batch frame belongs to a per-micro-batch CLONE
     // of the session; its temp views are invisible to the outer session, so
     // DDL + MERGE must run on the frame's own session

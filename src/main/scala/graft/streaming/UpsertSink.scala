@@ -6,32 +6,36 @@ import graft.core.Upsert
 
 /** The engine's merge sink (S6 streaming form): each micro-batch of upsert
   * events is folded into a persistent "current state" table with
-  * latest-wins semantics — the table-format-free equivalent of MERGE INTO.
+  * latest-wins semantics.
   *
-  * State is hash-partitioned into `numBuckets` key buckets, and a
-  * micro-batch rewrites ONLY the buckets its keys fall in — O(touched
-  * state), not O(state), per batch (the reference likewise updates only the
-  * block's keys, engine/post_storage.py:68-71). WHERE the buckets live and
-  * how a commit becomes visible is the [[UpsertStateStore]] backend:
-  * [[BucketSwapStore]] (default) swaps `current/__bucket=k/` directories in
-  * place; [[SnapshotStore]] writes immutable bucket dirs behind a versioned
-  * manifest + atomic pointer, giving concurrent readers snapshot isolation —
-  * the lakehouse-MERGE shape (the reference's durability contract is a
-  * transactional per-block upsert, stream_blocks.py:108-115); and
-  * [[CatalogMergeStore]] persists through an actual SQL `MERGE INTO` against
-  * a [[graft.connector.GraftCatalog]] table (DSv2 row-level operations) —
-  * the table-format MERGE backend, with a Delta/Iceberg target droppable in
-  * behind the same trait.
+  * State lives in a [[graft.connector.GraftCatalog]] table under
+  * `<stateDir>/state` and each batch installs through a real SQL
+  * `MERGE INTO` ([[CatalogMergeStore]]) — the table-format MERGE that maps
+  * the reference's durability contract, a transactional per-block upsert
+  * (stream_blocks.py:108-115). The manifest CAS gives atomic commit,
+  * snapshot isolation for readers concurrent with ingest, and vacuum.
+  * Rows carry a hash key bucket (`__bucket`), and the MERGE is gated to the
+  * buckets a batch touches, so the rewrite skips every dir whose committed
+  * `__bucket` range misses them.
+  *
+  * What one storage path gives up: the rewrite is pruned, not strictly
+  * O(touched buckets) — a dir that mixes touched and untouched buckets is
+  * rewritten whole. Swapping per-bucket directories in place would bound it
+  * strictly, but a reader concurrent with ingest (the paper's own traffic:
+  * API reads beside the block stream) could then see a bucket mid-swap.
+  * Nor is there a separate pointer-file publish for object stores: the
+  * catalog's manifest CAS, with its commit lock where rename is not atomic,
+  * already gives atomic commit, snapshot isolation and vacuum there.
   *
   * Combined with checkpointing (exactly-once micro-batches) the fold is
   * idempotent: replaying a batch re-merges the same rows onto state that
-  * already contains them and changes nothing — which is what makes every
-  * store's crash recovery safe: an interrupted install is healed by replay.
+  * already contains them and changes nothing, so a crash mid-merge is
+  * healed by replay.
   */
 class UpsertSink(spark: SparkSession, stateDir: String,
                  keys: Seq[String], seqCol: String, opCol: String,
                  numBuckets: Int = 16,
-                 backend: UpsertSink.Backend = UpsertSink.BucketSwap)
+                 backend: UpsertSink.Backend = UpsertSink.CatalogMerge)
     extends Serializable {
 
   import UpsertSink.{BucketCol, DeletedState, SeqState}
@@ -42,13 +46,8 @@ class UpsertSink(spark: SparkSession, stateDir: String,
   require(!(keys :+ seqCol :+ opCol).exists(UpsertSink.Reserved.contains),
     s"key/seq/op columns must not use reserved names ${UpsertSink.Reserved.mkString(", ")}")
 
-  private val store: UpsertStateStore = backend match {
-    case UpsertSink.BucketSwap => new BucketSwapStore(spark, stateDir)
-    case UpsertSink.Snapshot => new SnapshotStore(spark, stateDir)
-    case UpsertSink.CatalogMerge => new CatalogMergeStore(spark, stateDir, keys)
-    case UpsertSink.CatalogMergeMor =>
-      new CatalogMergeStore(spark, stateDir, keys, mergeOnRead = true)
-  }
+  private val store = new CatalogMergeStore(spark, stateDir, keys,
+    mergeOnRead = backend == UpsertSink.CatalogMergeMor)
 
   /** Stable key bucket: Murmur3 over the key columns, identical for a key on
     * the batch side and in the state layout.
@@ -56,18 +55,17 @@ class UpsertSink(spark: SparkSession, stateDir: String,
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(numBuckets)))
 
-  def state(): DataFrame = {
-    store.recover()
+  def state(): DataFrame =
     if (store.hasState)
-      store.read(None).map(_
+      store.read(None)
         .filter(!col(DeletedState))
-        .drop(BucketCol, SeqState, DeletedState))
-        .getOrElse(spark.emptyDataFrame)
+        .drop(BucketCol, SeqState, DeletedState)
     else spark.emptyDataFrame
-  }
 
   /** Merge one micro-batch of upsert-log rows into the state table,
-    * rewriting only the key buckets the batch touches.
+    * gating the MERGE to the key buckets the batch touches. `batchId` is
+    * the foreachBatch id; replay safety comes from the idempotent fold, not
+    * from the id.
     *
     * The state carries two bookkeeping columns per key so that CROSS-batch
     * out-of-order delivery reproduces full-log compaction: `__seq` — the
@@ -83,19 +81,18 @@ class UpsertSink(spark: SparkSession, stateDir: String,
     val clash = batch.columns.filter(UpsertSink.Reserved.contains)
     require(clash.isEmpty,
       s"batch carries reserved state-bookkeeping column(s) ${clash.mkString(", ")}")
-    store.recover()
     val b = withBucket(batch)
     val touched = b.select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
-    val existing =
+    val log =
       if (store.hasState)
         // only the touched buckets re-enter the fold, at their stored seq
-        store.read(Some(touched.toSeq)).map(_
+        store.read(Some(touched.toSeq))
           .withColumn(seqCol, col(SeqState))
           .withColumn(opCol, when(col(DeletedState), "delete").otherwise("upsert"))
-          .drop(SeqState, DeletedState))
-      else None
-    val log = existing.map(_.unionByName(b)).getOrElse(b)
+          .drop(SeqState, DeletedState)
+          .unionByName(b)
+      else b
     // __bucket is functionally dependent on the keys, so it survives the
     // per-key compaction unchanged
     val groupCols = (keys :+ BucketCol).map(col)
@@ -113,7 +110,7 @@ class UpsertSink(spark: SparkSession, stateDir: String,
         dataCols.map(c => lit(null).cast(log.schema(c).dataType).as(c)) :+
         col(SeqState) :+ lit(true).as(DeletedState): _*)
     val next = compacted.unionByName(tombstones)
-    store.commit(next, touched.toSeq, batchId)
+    store.commit(next, touched.toSeq)
   }
 
   /** Attach as a foreachBatch sink on a stream of upsert-log rows. */
@@ -126,27 +123,18 @@ class UpsertSink(spark: SparkSession, stateDir: String,
 
 object UpsertSink {
   /** State-bookkeeping column names the sink owns (see the constructor
-    * guard). `__bpart` is the SnapshotStore's transient staging partition
-    * column.
+    * guard).
     */
-  val Reserved: Set[String] = Set("__seq", "__deleted", "__bucket", "__bpart")
+  val Reserved: Set[String] = Set("__seq", "__deleted", "__bucket")
 
   private[streaming] val BucketCol = "__bucket"
-  private[streaming] val PartCol = "__bpart"
   private[streaming] val SeqState = "__seq"
   private[streaming] val DeletedState = "__deleted"
 
-  /** Which [[UpsertStateStore]] a sink persists through. */
+  /** The state table's MERGE mode. */
   sealed trait Backend extends Serializable
-  /** In-place `current/__bucket=k/` directory swap (zero-dependency default). */
-  case object BucketSwap extends Backend
-  /** Immutable bucket dirs + versioned manifest + atomic `_latest` pointer:
-    * snapshot isolation for concurrent readers, object-store-safe publish.
-    */
-  case object Snapshot extends Backend
-  /** State lives in a [[graft.connector.GraftCatalog]] table and each batch
-    * installs through a real SQL `MERGE INTO` (DSv2 row-level op) — full
-    * lakehouse transaction semantics, O(state) rewrite per batch.
+  /** Copy-on-write: each batch rewrites the state dirs its touched buckets
+    * fall in (the default).
     */
   case object CatalogMerge extends Backend
   /** [[CatalogMerge]] with the table in merge-on-read mode: a batch writes

@@ -108,4 +108,31 @@ class TablesSpec extends SparkSpec {
     assert(Tables.load(spark, d2.getAbsolutePath, "part").schema.fieldNames.toList
       == List("k", "w"))
   }
+
+  test("schema memo: a same-mtime rewrite with a new schema and length re-infers") {
+    // the memo key is (mtime, length): a rewrite that lands within the
+    // filesystem's mtime granularity (or restores the old mtime) must still
+    // resolve the new file's schema
+    import spark.implicits._
+    val d = Files.createTempDirectory("memo-mtime").toFile
+    d.deleteOnExit()
+    val target = new java.io.File(d, "part.parquet")
+    def writeSingleFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = Files.createTempDirectory("memo-mtime-w").toFile
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, target.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeSingleFile(Seq((1L, "x")).toDF("k", "v"))
+    val (mtime, length) = (target.lastModified(), target.length())
+    assert(Tables.load(spark, d.getAbsolutePath, "part").schema.fieldNames.toList
+      == List("k", "v"))
+    writeSingleFile(Seq((1L, 2.5, "y", 7)).toDF("k", "w", "z", "n"))
+    assert(target.setLastModified(mtime))
+    assert(target.lastModified() == mtime && target.length() != length)
+    val reloaded = Tables.load(spark, d.getAbsolutePath, "part")
+    assert(reloaded.schema.fieldNames.toList == List("k", "w", "z", "n"))
+    assert(reloaded.as[(Long, Double, String, Int)].collect().toList == List((1L, 2.5, "y", 7)))
+  }
 }

@@ -7,18 +7,16 @@ import org.apache.spark.sql.functions._
 
 /** The foreachBatch merge sink maintains a current-state table with
   * latest-wins semantics across micro-batches, and re-merging a batch is a
-  * no-op (idempotence under replay). The fold semantics must hold under
-  * EVERY storage backend; the layout-specific properties (bounded in-place
-  * rewrite, swap crash recovery, snapshot isolation, vacuum) are tested
-  * per store.
+  * no-op (idempotence under replay). The fold semantics must hold in both
+  * MERGE modes (copy-on-write and merge-on-read); the layout properties
+  * (bucket-gated rewrite, snapshot isolation, vacuum, compaction) are
+  * tested on the state table itself.
   */
 class UpsertSinkSpec extends SparkSpec {
   import spark.implicits._
   import StreamOps.KeyedEvent
 
   private val backends = Seq[(String, UpsertSink.Backend)](
-    "bucket-swap" -> UpsertSink.BucketSwap,
-    "snapshot" -> UpsertSink.Snapshot,
     "catalog-merge" -> UpsertSink.CatalogMerge,
     "catalog-mor" -> UpsertSink.CatalogMergeMor)
 
@@ -76,151 +74,109 @@ class UpsertSinkSpec extends SparkSpec {
         .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
       assert(revived == List(("a", "new"), ("b", "reborn")))
     }
+
+    test(s"[$bname] replaying an already-published batch keeps a pinned reader's snapshot; the replay is a no-op") {
+      val dir = Files.createTempDirectory(s"graft-sink-replay-$bname").toString
+      val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op",
+        numBuckets = 1, backend = backend)
+      sink.merge(Seq(("a", 1L, "upsert", "v1"))
+        .toDF("key", "seq", "op", "payload"), batchId = 0L)
+      val b1 = Seq(("a", 2L, "upsert", "v2"), ("b", 3L, "upsert", "w1"))
+        .toDF("key", "seq", "op", "payload")
+      sink.merge(b1, batchId = 1L)
+      // a reader pins the published version's file list now; the process then
+      // dies BEFORE the streaming checkpoint records batch 1, so the batch
+      // replays with the same id — the replay must not remove or rewrite
+      // what the pinned reader is scanning
+      val pinned = sink.state()
+      sink.merge(b1, batchId = 1L)
+      val seen = pinned.orderBy("key").collect()
+        .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
+      assert(seen == List(("a", "v2"), ("b", "w1")),
+        "replay destroyed the snapshot a pinned reader was scanning")
+      // and the replay itself is an idempotent no-op on fresh state
+      val fresh = sink.state().orderBy("key").collect()
+        .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
+      assert(fresh == seen)
+    }
+  }
+
+  test("reserved names: seq/key/op columns and batch columns the state owns are rejected") {
+    intercept[IllegalArgumentException] {
+      new UpsertSink(spark, Files.createTempDirectory("graft-sink-rsv").toString,
+        Seq("key"), "__seq", "op")
+    }
+    val dir = Files.createTempDirectory("graft-sink-reserved").toString
+    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op")
+    sink.merge(Seq(("a", 1L, "upsert", "v1"))
+      .toDF("key", "seq", "op", "payload"), batchId = 0L)
+    def files(): List[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(_.getPath).toList.sorted
+    }
+    val before = files()
+    // a batch carrying a state-bookkeeping column is refused before any write
+    for (reserved <- Seq("__bucket", "__deleted")) {
+      val bad = Seq(("a", 2L, "upsert", "v2", 0)).toDF("key", "seq", "op", "payload", reserved)
+      val e = intercept[IllegalArgumentException](sink.merge(bad, batchId = 1L))
+      assert(e.getMessage.contains(reserved))
+      assert(files() == before, s"a rejected $reserved batch wrote state files")
+    }
+    assert(sink.state().collect()
+      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList ==
+      List(("a", "v1")))
   }
 
   test("bounded rewrite: a merge leaves untouched key buckets byte-identical") {
     val dir = Files.createTempDirectory("graft-sink-bounded").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op", numBuckets = 8)
-    // seed state with keys spread across many buckets
-    sink.merge((1 to 64).map(i => (s"k$i", i.toLong, "upsert", s"v$i"))
-      .toDF("key", "seq", "op", "payload"), batchId = 0L)
+    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op", numBuckets = 16)
+    // single-key merges: the bucket gate keeps each MERGE off the other
+    // buckets' dirs, so the state accumulates per-bucket dirs
+    (1 to 8).foreach { i =>
+      sink.merge(Seq((s"k$i", i.toLong, "upsert", s"v$i"))
+        .toDF("key", "seq", "op", "payload"), batchId = i.toLong)
+    }
+    val log = new graft.connector.TableLog(s"$dir/state",
+      spark.sparkContext.hadoopConfiguration)
 
-    def snapshot(): Map[String, String] = {
-      val cur = new java.io.File(s"$dir/current")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-      walk(cur).filter(_.getName.endsWith(".parquet")).map { f =>
-        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-        val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-        f.getAbsolutePath -> md5.map("%02x".format(_)).mkString
+    def local(d: String) = new java.io.File(new java.net.URI(d).getPath)
+    // manifest dir name -> (parquet file name -> md5)
+    def snapshot(): Map[String, Map[String, String]] =
+      log.currentDirs().map { d =>
+        local(d).getName -> Option(local(d).listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet")).map { f =>
+            val md5 = java.security.MessageDigest.getInstance("MD5")
+              .digest(java.nio.file.Files.readAllBytes(f.toPath))
+            f.getName -> md5.map("%02x".format(_)).mkString
+          }.toMap
       }.toMap
+    def bucketRange(d: String): (Int, Int) = {
+      val r = spark.read.parquet(d).agg(min("__bucket"), max("__bucket")).head()
+      (r.getInt(0), r.getInt(1))
     }
 
     val before = snapshot()
-    assert(before.nonEmpty)
-    // single-key merge: only that key's bucket may change
+    val ranges = log.currentDirs().map(d => local(d).getName -> bucketRange(d)).toMap
+    val k1Bucket = spark.sql("SELECT pmod(hash('k1'), 16)").head().getInt(0)
+    val untouched = before.keySet.filter { d =>
+      val (lo, hi) = ranges(d)
+      k1Bucket < lo || k1Bucket > hi
+    }
+    assert(untouched.size >= 2,
+      s"expected per-bucket dirs to accumulate, got ranges $ranges")
+    // single-key merge: only dirs whose bucket range holds k1's may change
     sink.merge(Seq(("k1", 100L, "upsert", "v1b"))
-      .toDF("key", "seq", "op", "payload"), batchId = 1L)
+      .toDF("key", "seq", "op", "payload"), batchId = 9L)
     val after = snapshot()
-
-    val changedDirs = (before.keySet ++ after.keySet)
-      .filter(p => before.get(p) != after.get(p))
-      .map(p => new java.io.File(p).getParentFile.getName)
-    assert(changedDirs.size == 1, s"expected exactly one rewritten bucket, got $changedDirs")
-    // every file outside the touched bucket is byte-identical (same path, same md5)
-    val untouched = before.filter { case (p, _) =>
-      new java.io.File(p).getParentFile.getName != changedDirs.head }
-    assert(untouched.forall { case (p, h) => after.get(p).contains(h) })
+    for (d <- untouched) {
+      assert(after.contains(d), s"untouched-bucket dir $d left the manifest")
+      assert(after(d) == before(d), s"untouched-bucket dir $d changed bytes")
+    }
     // and the merge itself is correct
-    val got = sink.state().filter(col("key") === "k1").collect()
-      .map(_.getAs[String]("payload")).toList
-    assert(got == List("v1b"))
-  }
-
-  test("crash between moving a bucket aside and installing the staged copy is recovered") {
-    val dir = Files.createTempDirectory("graft-sink-crash").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op", numBuckets = 4)
-    sink.merge((1 to 16).map(i => (s"k$i", i.toLong, "upsert", s"v$i"))
-      .toDF("key", "seq", "op", "payload"), batchId = 0L)
-    val before = sink.state().collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toMap
-
-    // simulate the worst-case crash point: the current bucket dir was moved
-    // aside to old-<batch>-<k> but the staged replacement never landed
-    val cur = new java.io.File(s"$dir/current")
-    val part = Option(cur.listFiles()).toSeq.flatten
-      .find(_.getName.startsWith("__bucket=")).get
-    val k = part.getName.stripPrefix("__bucket=")
-    assert(part.renameTo(new java.io.File(s"$dir/old-7-$k")))
-
-    // the next read (or merge) must heal the half-done swap: no key lost
-    val recovered = sink.state().collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toMap
-    assert(recovered == before, "keys lost across simulated crash")
-    assert(!new java.io.File(s"$dir/old-7-$k").exists())
-
-    // completed-install crash shape: old copy left behind AFTER the staged
-    // dir was installed — recovery must keep the new data and drop the old
-    val stale = new java.io.File(s"$dir/old-8-$k")
-    stale.mkdirs()
-    val healed = sink.state().collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toMap
-    assert(healed == before)
-    assert(!stale.exists())
-  }
-
-  test("snapshot store: a concurrent reader keeps its pinned version across a merge") {
-    val dir = Files.createTempDirectory("graft-sink-iso").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op",
-      numBuckets = 4, backend = UpsertSink.Snapshot)
-    sink.merge(Seq(("a", 1L, "upsert", "v1"), ("b", 2L, "upsert", "w1"))
-      .toDF("key", "seq", "op", "payload"), batchId = 0L)
-    // the reader resolves the manifest pointer NOW — its file list is pinned
-    // to this version's immutable data dirs
-    val reader = sink.state()
-    // a writer commits a new version underneath it
-    sink.merge(Seq(("a", 3L, "upsert", "v2"), ("b", 4L, "delete", null))
-      .toDF("key", "seq", "op", "payload"), batchId = 1L)
-    // the pinned reader still sees its snapshot (old dirs are immutable and
-    // retained until vacuum) — the property the in-place swap cannot give
-    val pinned = reader.orderBy("key").collect()
+    val got = sink.state().orderBy("key").collect()
       .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(pinned == List(("a", "v1"), ("b", "w1")))
-    // while a fresh reader sees the new version
-    val fresh = sink.state().orderBy("key").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(fresh == List(("a", "v2")))
-  }
-
-  test("snapshot store: crashed-attempt orphan data dir is ignored on replay and reclaimed by vacuum") {
-    val dir = Files.createTempDirectory("graft-sink-orphan").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op",
-      numBuckets = 1, backend = UpsertSink.Snapshot)
-    sink.merge(Seq(("a", 1L, "upsert", "v1"))
-      .toDF("key", "seq", "op", "payload"), batchId = 0L)
-    // a crashed attempt of batch 5 left its (attempt-suffixed) data dir
-    // installed but never published a manifest — the replay writes under a
-    // FRESH attempt name (never renames onto or deletes an existing path),
-    // so the junk is simply unreferenced until vacuum reclaims it
-    val orphan = new java.io.File(s"$dir/data/b0-5-deadbeef")
-    orphan.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(orphan, "junk.parquet").toPath, "not parquet")
-    sink.merge(Seq(("a", 5L, "upsert", "v5"))
-      .toDF("key", "seq", "op", "payload"), batchId = 5L)
-    val state = sink.state().collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(state == List(("a", "v5")))
-    new SnapshotStore(spark, dir).vacuum(keepVersions = 1)
-    assert(!orphan.exists(), "unreferenced crashed-attempt dir survived vacuum")
-    val after = sink.state().collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(after == state)
-  }
-
-  test("snapshot store: replaying an already-published batch never unlinks the published snapshot") {
-    val dir = Files.createTempDirectory("graft-sink-replay-iso").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op",
-      numBuckets = 1, backend = UpsertSink.Snapshot)
-    sink.merge(Seq(("a", 1L, "upsert", "v1"))
-      .toDF("key", "seq", "op", "payload"), batchId = 0L)
-    val b1 = Seq(("a", 2L, "upsert", "v2"), ("b", 3L, "upsert", "w1"))
-      .toDF("key", "seq", "op", "payload")
-    sink.merge(b1, batchId = 1L)
-    // a reader pins the published version's file list now; the process then
-    // dies BEFORE the streaming checkpoint records batch 1, so the batch
-    // replays with the same id — its previous attempt's dirs are referenced
-    // by the live manifest and must not be deleted out from under the reader
-    val pinned = sink.state()
-    sink.merge(b1, batchId = 1L)
-    val seen = pinned.orderBy("key").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(seen == List(("a", "v2"), ("b", "w1")),
-      "replay destroyed the snapshot a pinned reader was scanning")
-    // and the replay itself is an idempotent no-op on fresh state
-    val fresh = sink.state().orderBy("key").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(fresh == seen)
+    assert(got == (1 to 8).map(i => s"k$i" -> (if (i == 1) "v1b" else s"v$i")).toList)
   }
 
   test("catalog-merge store: state is a queryable SQL table with version history") {
@@ -372,25 +328,5 @@ class UpsertSinkSpec extends SparkSpec {
     assert(mor.state().orderBy("key").collect()
       .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList ==
       List("a" -> "v2", "b" -> "w1"))
-  }
-
-  test("snapshot store: vacuum drops superseded versions, keeps the live snapshot") {
-    val dir = Files.createTempDirectory("graft-sink-vacuum").toString
-    val sink = new UpsertSink(spark, dir, Seq("key"), "seq", "op",
-      numBuckets = 2, backend = UpsertSink.Snapshot)
-    for (i <- 0 to 2)
-      sink.merge(Seq(("a", i.toLong, "upsert", s"v$i"), ("b", i.toLong, "upsert", s"w$i"))
-        .toDF("key", "seq", "op", "payload"), batchId = i.toLong)
-    new SnapshotStore(spark, dir).vacuum(keepVersions = 1)
-    // only the live version's data dirs survive (b<k>-<batch>-<attempt>)
-    val dataDirs = Option(new java.io.File(s"$dir/data").listFiles()).toSeq.flatten
-    assert(dataDirs.nonEmpty && dataDirs.forall(_.getName.matches("b\\d+-2-[0-9a-f]{8}")),
-      s"stale data dirs survived vacuum: ${dataDirs.map(_.getName).toList}")
-    val manifests = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("manifest-")).map(_.getName)
-    assert(manifests == Seq("manifest-3"))
-    val state = sink.state().orderBy("key").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("payload"))).toList
-    assert(state == List(("a", "v2"), ("b", "w2")))
   }
 }
